@@ -164,6 +164,8 @@ def global_session_intervals(
     two-level rank — per-band row_number + an O(#bands) cumulative
     offset — so no per-session single-partition pass runs either.
     Requires band_seconds > gap_seconds (defaults to max(6*gap, 3600)).
+    Rows whose ``ts`` is NULL belong to no session (they are dropped
+    before banding); an input with no timestamped row yields no rows.
 
     ``artifact_key``: like the ANN index keys — when the caller's input
     is a stable named source (a table path + filter), passing a key that
@@ -177,9 +179,13 @@ def global_session_intervals(
     gap_us = F.lit(gap_seconds * 1_000_000).cast("long")
     band_us = band_seconds * 1_000_000
 
-    banded = df.withColumn(
-        "__tus", F.unix_micros(F.col(ts).cast("timestamp"))
-    ).withColumn("__band", F.floor(F.col("__tus") / F.lit(band_us)))
+    # a row without a timestamp has no place on the timeline: it belongs
+    # to no session, on the driver fold and the distributed fold alike
+    banded = (
+        df.withColumn("__tus", F.unix_micros(F.col(ts).cast("timestamp")))
+        .filter(F.col("__tus").isNotNull())
+        .withColumn("__band", F.floor(F.col("__tus") / F.lit(band_us)))
+    )
 
     # level 1 IS the keyed sessionize, keyed by the band — one gap-fold
     # definition in the engine, two callers

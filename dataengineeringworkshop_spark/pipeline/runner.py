@@ -105,6 +105,8 @@ class Pipeline:
         self.name = name
         self.storage = storage_dir.rstrip("/")
         self.datasets: dict[str, DatasetSpec] = {}
+        # upstream views registered by the current run (None between runs)
+        self._run_view_memo: set[str] | None = None
 
     # ------------------------------------------------------------- define
 
@@ -252,8 +254,15 @@ class Pipeline:
         # ``spark.read.parquet`` listing+footer reads and N catalog writes
         # (driver-side, ~50-150 ms each); within one run a materialized
         # node is written exactly once, before any consumer builds, so
-        # one registration per dataset is sound.
-        self._run_view_memo: set[str] = set()
+        # one registration per dataset is sound.  The memo ends with the
+        # run, so a later substitution re-registers its view.
+        self._run_view_memo = set()
+        try:
+            return self._run_dag(spark)
+        finally:
+            self._run_view_memo = None
+
+    def _run_dag(self, spark: SparkSession) -> dict[str, dict]:
         os.makedirs(self.event_log_path, exist_ok=True)
         run_id = int(time.time() * 1000)
         events_file = f"{self.event_log_path}/run-{run_id}.jsonl"
@@ -332,7 +341,7 @@ class Pipeline:
                 sdf.createOrReplaceTempView(view)
             else:
                 if spec.kind != "view":  # views already registered in topo order
-                    memo = getattr(self, "_run_view_memo", None)
+                    memo = self._run_view_memo
                     if memo is None or view not in memo:
                         self.read_dataset(spark, name).createOrReplaceTempView(view)
                         if memo is not None:

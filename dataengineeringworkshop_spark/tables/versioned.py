@@ -50,6 +50,10 @@ from pyspark.sql import functions as F
 
 _LOG_DIR = "_dew_log"
 
+#: deletion-vector sidecar layout: one row per soft-deleted row position
+#: (``file_ref`` is the scan-side ``_metadata.file_path``, see _scan_ref)
+_DV_SCHEMA = "file_ref string, pos long"
+
 
 @dataclass
 class Commit:
@@ -224,7 +228,7 @@ class VersionedTable:
         if mode == "append" and prev is not None:
             from pyspark.sql.types import StructType
 
-            old = StructType.fromDDL(_ddl_of(prev.schema_ddl))
+            old = _schema_of(prev)
             merged = list(old.fields)
             by_name = {f.name: f for f in old.fields}
             for f in df.schema.fields:
@@ -317,16 +321,13 @@ class VersionedTable:
         reference's ZORDER point-lookup exercise (`2 Medaillon
         architecture.py:436-465`) on the parquet-backed format."""
         c = self._resolve_commit(version)
-        from pyspark.sql.types import StructType
-
-        committed = StructType.fromDDL(_ddl_of(c.schema_ddl))
         if where:
             paths = self.scan_files(version, where)
             if not paths:
                 # stats pruned EVERY file (point lookup outside all
-                # min/max ranges) — an empty result, like Delta, not an
-                # UNABLE_TO_INFER_SCHEMA crash from a zero-path scan
-                return self.spark.createDataFrame([], committed)
+                # min/max ranges) — an empty result, like Delta, not a
+                # zero-path scan
+                return self.spark.createDataFrame([], _schema_of(c))
         else:
             paths = [self._abs(d) for d in c.data_dirs]
         out = self._evolved(paths, c)
@@ -341,10 +342,21 @@ class VersionedTable:
     def _scan_ref() -> F.Column:
         return F.regexp_replace(F.col("_metadata.file_path"), "^file:", "")
 
+    def _scan(self, paths: list[str], schema) -> DataFrame:
+        """The one parquet scan of this module.  ``schema`` is always
+        known — the commit's ``schema_ddl``, the fixed deletion-vector
+        layout, or the schema of the frame just written — so Spark never
+        runs a footer-listing job to infer or merge one (Delta's
+        metadata-in-the-log read path).  A file that lacks a requested
+        column (written before ADD COLUMN) reads it as NULL; DML writes
+        cast assigned values to the committed types, so every data file
+        matches the commit it belongs to."""
+        return self.spark.read.schema(schema).parquet(*paths)
+
     def _evolved(self, paths: list[str], c: Commit, lineage: bool = False) -> DataFrame:
-        """Scan ``paths`` (dirs and/or files) evolved to the commit's
-        schema: missing columns (pre-ADD COLUMN files) surface as nulls,
-        column order is the committed order.
+        """Scan ``paths`` (dirs and/or files) with the commit's schema:
+        missing columns (pre-ADD COLUMN files) surface as nulls, column
+        order is the committed order.
 
         If the commit carries deletion vectors, soft-deleted (file, pos)
         rows are removed with an anti-join against the DV sidecar —
@@ -355,9 +367,7 @@ class VersionedTable:
 
         ``lineage=True`` appends ``__dew_ref`` (absolute file path) and
         ``__dew_pos`` (row position in that file) for DML probes."""
-        from pyspark.sql.types import StructType
-
-        committed = StructType.fromDDL(_ddl_of(c.schema_ddl))
+        committed = _schema_of(c)
         if not paths:
             empty = self.spark.createDataFrame([], committed)
             if lineage:
@@ -365,14 +375,14 @@ class VersionedTable:
                     "__dew_ref", F.lit(None).cast("string")
                 ).withColumn("__dew_pos", F.lit(None).cast("long"))
             return empty
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        df = self._scan(paths, committed)
         dv_paths = [self._abs(d) for d in (c.dv_dirs or [])]
         if dv_paths or lineage:
             df = df.withColumn("__dew_ref", self._scan_ref()).withColumn(
                 "__dew_pos", F.col("_metadata.row_index")
             )
         if dv_paths:
-            dv = self.spark.read.parquet(*dv_paths).select(
+            dv = self._scan(dv_paths, _DV_SCHEMA).select(
                 F.col("file_ref").alias("__dv_ref"), F.col("pos").alias("__dv_pos")
             )
             df = df.join(
@@ -381,9 +391,6 @@ class VersionedTable:
                 & (F.col("__dew_pos") == F.col("__dv_pos")),
                 "left_anti",
             )
-        for field in committed.fields:
-            if field.name not in df.columns:
-                df = df.withColumn(field.name, F.lit(None).cast(field.dataType))
         cols = [f.name for f in committed.fields]
         if lineage:
             cols += ["__dew_ref", "__dew_pos"]
@@ -558,9 +565,11 @@ class VersionedTable:
             touched, untouched = self._active_refs(prev), []
             cur = self.read()
         cond = F.expr(condition) if condition else F.lit(True)
+        types = _types_of(prev)
         out = cur.select(
             *[
-                (F.when(cond, F.expr(expr)).otherwise(F.col(c)).alias(c)
+                (F.when(cond, F.expr(expr).cast(types[c]))
+                 .otherwise(F.col(c)).alias(c)
                  if c in set_exprs and (expr := set_exprs[c]) is not None
                  else F.col(c))
                 for c in cur.columns
@@ -605,14 +614,14 @@ class VersionedTable:
                 matched.write.mode("overwrite").parquet(
                     f"{self.path}/{rel_stage}"
                 )
-                staged = self.spark.read.parquet(f"{self.path}/{rel_stage}")
+                staged = self._scan([f"{self.path}/{rel_stage}"], matched.schema)
                 staged.select(
                     F.col("__dew_ref").alias("file_ref"),
                     F.col("__dew_pos").alias("pos"),
                 ).coalesce(1).write.mode("overwrite").parquet(
                     f"{self.path}/{rel_dv}"
                 )
-                n = self.spark.read.parquet(f"{self.path}/{rel_dv}").count()
+                n = _footer_rows(f"{self.path}/{rel_dv}")
             if n == 0:
                 shutil.rmtree(f"{self.path}/{rel_dv}", ignore_errors=True)
                 self._commit(
@@ -628,9 +637,10 @@ class VersionedTable:
             data_cols = [
                 c for c in staged.columns if c not in ("__dew_ref", "__dew_pos")
             ]
+            types = _types_of(prev)
             updated = staged.select(
                 *[
-                    (F.expr(expr).alias(c)
+                    (F.expr(expr).cast(types[c]).alias(c)
                      if c in set_exprs and (expr := set_exprs[c]) is not None
                      else F.col(c))
                     for c in data_cols
@@ -789,7 +799,7 @@ class VersionedTable:
             hits.coalesce(1).write.mode("overwrite").parquet(
                 f"{self.path}/{rel_dv}"
             )
-            n_deleted = self.spark.read.parquet(f"{self.path}/{rel_dv}").count()
+            n_deleted = _footer_rows(f"{self.path}/{rel_dv}")
             if n_deleted == 0:
                 import shutil
 
@@ -857,7 +867,7 @@ class VersionedTable:
 
         src_stage = f"v{prev.version + 1:08d}-stage-{uuid.uuid4().hex[:8]}"
         source.write.mode("overwrite").parquet(f"{self.path}/{src_stage}")
-        source = self.spark.read.parquet(f"{self.path}/{src_stage}")
+        source = self._scan([f"{self.path}/{src_stage}"], source.schema)
         try:
             self._merge_mor_staged(
                 source, on, update_condition, insert, update, nmbs_action,
@@ -898,7 +908,7 @@ class VersionedTable:
             F.col("t.__dew_ref").alias("file_ref"),
             F.col("t.__dew_pos").alias("pos"),
         ).coalesce(1).write.mode("overwrite").parquet(f"{self.path}/{rel_dv}")
-        n_dv = self.spark.read.parquet(f"{self.path}/{rel_dv}").count()
+        n_dv = _footer_rows(f"{self.path}/{rel_dv}")
         if n_dv == 0:
             import shutil
 
@@ -907,7 +917,9 @@ class VersionedTable:
 
         all_cols = cols + [f.name for f in new_fields]
         new_types = {f.name: f.dataType for f in new_fields}
-        upd_set = {c: F.expr(e) for c, e in (nmbs_set or {}).items()}
+        # store assignment: written values take the committed column type
+        types = {**_types_of(prev), **new_types}
+        upd_set = {c: F.expr(e).cast(types[c]) for c, e in (nmbs_set or {}).items()}
         appends: DataFrame | None = None
 
         def _add(df: DataFrame) -> None:
@@ -918,7 +930,7 @@ class VersionedTable:
             # new versions of updated rows take source values (UPDATE *)
             _add(
                 joined.filter(take_source).select(
-                    *[F.col(f"s.{c}").alias(c) for c in all_cols]
+                    *[F.col(f"s.{c}").cast(types[c]).alias(c) for c in all_cols]
                 )
             )
         if nmbs_action == "update":
@@ -941,7 +953,7 @@ class VersionedTable:
         if insert:
             _add(
                 src.join(t.alias("t"), F.expr(on), "left_anti").select(
-                    *[F.col(f"s.{c}").alias(c) for c in all_cols]
+                    *[F.col(f"s.{c}").cast(types[c]).alias(c) for c in all_cols]
                 )
             )
         rel = None
@@ -949,7 +961,7 @@ class VersionedTable:
         if appends is not None:
             rel = self._new_data_dir(prev.version + 1)
             appends.write.mode("overwrite").parquet(f"{self.path}/{rel}")
-            n_app = self.spark.read.parquet(f"{self.path}/{rel}").count()
+            n_app = _footer_rows(f"{self.path}/{rel}")
             if n_app == 0:
                 import shutil
 
@@ -958,9 +970,8 @@ class VersionedTable:
         if new_fields:
             from pyspark.sql.types import StructType
 
-            old_schema = StructType.fromDDL(_ddl_of(prev.schema_ddl))
             schema_ddl = StructType(
-                list(old_schema.fields) + new_fields
+                list(_schema_of(prev).fields) + new_fields
             ).simpleString()
         else:
             schema_ddl = prev.schema_ddl
@@ -1095,6 +1106,15 @@ class VersionedTable:
                         )
                 else:
                     new_fields.append(f)
+        unknown = (
+            set(unmatched_by_source_set or {})
+            - set(cols)
+            - {f.name for f in new_fields}
+        )
+        if unknown:
+            raise ValueError(
+                f"NOT MATCHED BY SOURCE SET references unknown columns {sorted(unknown)}"
+            )
         # Delta raises when several source rows match one target row; a
         # full-outer join would silently DUPLICATE the target instead.
         # Checkable only for the pure conjunctive-equality ON form; the
@@ -1201,25 +1221,24 @@ class VersionedTable:
             if unmatched_by_source_condition
             else F.lit(True)
         )
-        upd_set = {
-            c: F.expr(e) for c, e in (unmatched_by_source_set or {}).items()
-        }
         all_cols = cols + [f.name for f in new_fields]
-        unknown = set(upd_set) - set(all_cols)
-        if unknown:
-            raise ValueError(
-                f"NOT MATCHED BY SOURCE SET references unknown columns {sorted(unknown)}"
-            )
         new_types = {f.name: f.dataType for f in new_fields}
+        # store assignment: written values take the committed column type
+        types = {**_types_of(prev), **new_types}
+        upd_set = {
+            c: F.expr(e).cast(types[c])
+            for c, e in (unmatched_by_source_set or {}).items()
+        }
 
         def _out_col(c: str):
+            s_val = F.col(f"s.{c}").cast(types[c])
             if c in new_types:
                 # evolution-added column: no target-side value exists
-                base = F.when(take_source, F.col(f"s.{c}")).otherwise(
+                base = F.when(take_source, s_val).otherwise(
                     F.lit(None).cast(new_types[c])
                 )
             else:
-                base = F.when(take_source, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}"))
+                base = F.when(take_source, s_val).otherwise(F.col(f"t.{c}"))
             if unmatched_by_source_action == "update" and c in upd_set:
                 base = F.when(tgt_only & nmbs_cond, upd_set[c]).otherwise(base)
             return base.alias(c)
@@ -1231,9 +1250,8 @@ class VersionedTable:
         if new_fields:
             from pyspark.sql.types import StructType
 
-            old_schema = StructType.fromDDL(_ddl_of(prev.schema_ddl))
             schema_ddl = StructType(
-                list(old_schema.fields) + new_fields
+                list(_schema_of(prev).fields) + new_fields
             ).simpleString()
         else:
             schema_ddl = prev.schema_ddl
@@ -1347,7 +1365,7 @@ class VersionedTable:
                 file_stats=prev.file_stats or {},
             )
             return
-        dv = self.spark.read.parquet(*dv_paths)
+        dv = self._scan(dv_paths, _DV_SCHEMA)
         counts = {
             r.file_ref: int(r.n)
             for r in dv.groupBy("file_ref").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -1388,7 +1406,7 @@ class VersionedTable:
             dv.filter(
                 F.col("file_ref").isin([abs_of[r] for r in carried])
             ).coalesce(1).write.mode("overwrite").parquet(f"{self.path}/{cand}")
-            if self.spark.read.parquet(f"{self.path}/{cand}").count() > 0:
+            if _footer_rows(f"{self.path}/{cand}") > 0:
                 rel_dv = cand
             else:
                 import shutil
@@ -1504,10 +1522,7 @@ class VersionedTable:
         """ALTER TABLE ADD COLUMN (S10, N1:146-147) — metadata-only commit;
         existing files read back with nulls for the new column."""
         prev = self._latest()
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromDDL(_ddl_of(prev.schema_ddl))
-        if name in [f.name for f in schema.fields]:
+        if name in [f.name for f in _schema_of(prev).fields]:
             raise ValueError(f"column {name} already exists")
         new_ddl = prev.schema_ddl[:-1] + f",{name}:{dtype}>"
         self._commit("ADD COLUMNS", prev.data_dirs, new_ddl, {"column": name, "type": dtype})
@@ -1655,6 +1670,18 @@ def _morton_key(df: DataFrame, cols: list[str]):
     return reduce(lambda a, b: a.bitwiseOR(b), bit_parts)
 
 
+def _footer_rows(abs_dir: str) -> int:
+    """Row count of a freshly written parquet directory, summed from the
+    file footers on the driver — no Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.ParquetFile(f"{abs_dir}/{fn}").metadata.num_rows
+        for fn in os.listdir(abs_dir)
+        if fn.endswith(".parquet")
+    )
+
+
 def _footer_stats(abs_dir: str, rel_dir: str, columns: list[str]) -> dict:
     """{rel_file: {col: [min, max]}} from parquet footer row-group stats —
     metadata-only, no data scan.  Columns whose stats are absent (or of
@@ -1740,6 +1767,18 @@ def _stats_exclude(file_stats: dict, bounds: list[tuple[str, str, object]]) -> b
         if op == ">" and hi == val:
             return True
     return False
+
+
+def _schema_of(c: Commit):
+    """The commit's table schema as a StructType."""
+    from pyspark.sql.types import StructType
+
+    return StructType.fromDDL(_ddl_of(c.schema_ddl))
+
+
+def _types_of(c: Commit) -> dict:
+    """{column: committed DataType} — the target types DML casts to."""
+    return {f.name: f.dataType for f in _schema_of(c).fields}
 
 
 def _ddl_of(simple_string: str) -> str:

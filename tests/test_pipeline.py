@@ -269,6 +269,25 @@ def test_temp_table_materializes_without_history(spark, tmp_path):
     assert open_table(spark, p._table_dir("gold")).history().count() == 2
 
 
+def test_substitution_after_run_reregisters_view(spark, tmp_path):
+    """The per-run upstream-view memo ends with the run: a live.<name>
+    substitution after a completed run re-registers the view, so it
+    reads the dataset's CURRENT snapshot, not the one the run saw."""
+    from dataengineeringworkshop_spark.pipeline.runner import Pipeline
+    from dataengineeringworkshop_spark.tables.backend import open_table
+
+    p = Pipeline("memo", str(tmp_path / "pl"))
+    p.table("base", fn=lambda s, _r: s.range(10).withColumnRenamed("id", "v"))
+    p.table("gold", "SELECT CAST(SUM(v) AS BIGINT) AS total FROM live.base")
+    p.run(spark)
+    assert p._run_view_memo is None
+    open_table(spark, p._table_dir("base")).write(
+        spark.range(3).withColumnRenamed("id", "v"), mode="overwrite"
+    )
+    q = p._substitute(spark, "SELECT COUNT(*) AS n FROM live.base", streaming=False)
+    assert spark.sql(q).first().n == 3
+
+
 def test_fail_mode_publishes_nothing(spark, tmp_path):
     """Transactional FAIL UPDATE: when the row-level guard aborts the
     write action, neither the versioned table nor a temp table may

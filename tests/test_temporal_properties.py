@@ -201,6 +201,66 @@ def test_gsi_driver_fold_equals_distributed_fold(spark, secs, gap):
     assert fast == slow, (fast, slow, gap)
 
 
+def _naive_session_fold(secs, gap):
+    """Linear fold over the sorted non-null timeline -> (sid, start, end)."""
+    want, sid = [], 0
+    start = end = None
+    for s in sorted(x for x in secs if x is not None):
+        t = s * 1_000_000
+        if end is None or t - end > gap * 1_000_000:
+            if end is not None:
+                want.append((sid, start, end))
+            sid += 1
+            start = t
+        end = t
+    if end is not None:
+        want.append((sid, start, end))
+    return want
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    secs=st.lists(
+        st.one_of(st.none(), st.integers(0, 5 * 3600)), min_size=0, max_size=40
+    ),
+    gap=st.sampled_from([1, 600, 3599]),
+)
+def test_gsi_null_and_empty_driver_fold_equals_distributed_fold(spark, secs, gap):
+    """Null timestamps belong to no session, on BOTH band folds: the
+    driver fold and the distributed fallback (forced with a negative
+    cap, which also sends an empty summary down the fallback) agree with
+    each other and with a linear fold over the non-null timeline — on
+    inputs with NULL ``ts``, all-NULL inputs and empty inputs."""
+    from pyspark.sql import functions as F
+
+    import dataengineeringworkshop_spark.operators.temporal as temporal
+
+    df = spark.createDataFrame(
+        list(enumerate(secs)), "event_id long, secs long"
+    ).withColumn("ts", F.timestamp_seconds("secs"))
+
+    def run():
+        return sorted(
+            map(
+                tuple,
+                temporal.global_session_intervals(
+                    df, ts="ts", gap_seconds=gap, order_tiebreak="event_id",
+                    band_seconds=3600,
+                ).collect(),
+            )
+        )
+
+    fast = run()
+    old_cap = temporal.BANDS_DRIVER_CAP
+    temporal.BANDS_DRIVER_CAP = -1
+    try:
+        slow = run()
+    finally:
+        temporal.BANDS_DRIVER_CAP = old_cap
+    want = _naive_session_fold(secs, gap)
+    assert fast == slow == sorted(want), (fast, slow, want, gap)
+
+
 # ---------------------------------------------------------------------------
 # streaming session fold (streaming/sessions.py) vs linear-scan sessionizer
 

@@ -314,3 +314,101 @@ def test_shallow_clone_target_exists_raises(spark, tmp_path):
     t.shallow_clone(str(tmp_path / "c1"))
     with _pytest.raises(ValueError, match="already exists"):
         t.shallow_clone(str(tmp_path / "c1"))
+
+
+def _jobs_in_group(spark, group, action):
+    """Run ``action`` under job group ``group``; return its job count."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_point_lookup_and_time_travel_run_one_spark_job(spark, vt):
+    """Reads take their schema from the commit log: a collected point
+    lookup and a time-travel read each run exactly ONE Spark job — the
+    data scan, with no footer-merge schema-discovery job before it."""
+    import uuid
+
+    t, o = vt
+    t.optimize(zorder_by=["o_orderkey"], target_files=4)
+    key = o.agg(F.max("o_orderkey")).collect()[0][0]
+    tag = uuid.uuid4().hex[:8]
+
+    got = []
+    n = _jobs_in_group(
+        spark, f"lookup-{tag}",
+        lambda: got.extend(t.read(where=f"o_orderkey = {key}").collect()),
+    )
+    assert len(got) == 1
+    assert n == 1, f"point lookup ran {n} Spark jobs"
+
+    n = _jobs_in_group(spark, f"tt-{tag}", lambda: t.read(version=0).collect())
+    assert n == 1, f"time-travel read ran {n} Spark jobs"
+
+
+def _int_table(spark, tmp_path, rows):
+    from dataengineeringworkshop_spark.tables.versioned import VersionedTable
+
+    t = VersionedTable(spark, str(tmp_path / "qty_vt"))
+    t.write(spark.createDataFrame(rows, "id int, qty int"))
+    return t
+
+
+def _assert_int_files(t):
+    """The commit says ``qty int`` and every active data file stores it so."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    assert "qty:int" in t._latest().schema_ddl
+    files = t.scan_files()
+    assert files
+    for f in files:
+        assert pq.read_schema(f).field("qty").type == pa.int32(), f
+
+
+@pytest.mark.parametrize(
+    "mode,condition",
+    [("cow", None), ("cow", "id > 1"), ("mor", "id > 1")],
+)
+def test_update_casts_assignment_to_committed_type(spark, tmp_path, mode, condition):
+    """Delta's store-assignment rule: ``SET qty = qty * 1.5`` on an INT
+    column writes INT (decimal truncated toward zero), so the data files
+    keep matching the committed schema and reads return ``int``."""
+    rows = [(1, 3), (2, 3), (3, 5), (4, -3)]
+    t = _int_table(spark, tmp_path, rows)
+    t.update({"qty": "qty * 1.5"}, condition=condition, mode=mode)
+    got = t.read()
+    assert dict(got.dtypes)["qty"] == "int"
+    want = {
+        i: (int(q * 1.5) if condition is None or i > 1 else q) for i, q in rows
+    }
+    assert {r.id: r.qty for r in got.collect()} == want
+    _assert_int_files(t)
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+@pytest.mark.parametrize("src_type", ["smallint", "bigint"])
+def test_merge_casts_source_to_committed_type(spark, tmp_path, mode, src_type):
+    """MERGE ``UPDATE SET *`` / ``INSERT *`` from a narrower or wider
+    source column, and a BY SOURCE ``SET`` with a decimal expression, all
+    write the target's INT type."""
+    t = _int_table(spark, tmp_path, [(1, 10), (2, 20), (3, 30)])
+    src = spark.createDataFrame([(2, 200), (4, 400)], f"id int, qty {src_type}")
+    t.merge(src, on="t.id = s.id", mode=mode)
+    assert {r.id: r.qty for r in t.read().collect()} == {1: 10, 2: 200, 3: 30, 4: 400}
+    _assert_int_files(t)
+
+    src = spark.createDataFrame([(2, 7)], f"id int, qty {src_type}")
+    t.merge(
+        src, on="t.id = s.id", mode=mode,
+        unmatched_by_source_action="update",
+        unmatched_by_source_set={"qty": "t.qty * 1.5"},
+    )
+    got = t.read()
+    assert dict(got.dtypes)["qty"] == "int"
+    assert {r.id: r.qty for r in got.collect()} == {1: 15, 2: 7, 3: 45, 4: 600}
+    _assert_int_files(t)
